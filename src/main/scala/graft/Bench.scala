@@ -94,25 +94,32 @@ object Bench {
       .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
   }
 
+  /** Timed repetitions per query (`SPARK_GRAFT_REPS`, default 3). */
+  private[graft] def reps: Int = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
+
+  /** The `SPARK_GRAFT_ONLY` subset valve (comma-separated query names) of
+    * Bench and Verify, for local iteration: unset or empty selects every
+    * query. A name that is not a query fails loudly — a typo would
+    * otherwise select nothing, and a zero-query run reads as success. */
+  private[graft] def only(): Set[String] =
+    parseOnly(sys.env.get("SPARK_GRAFT_ONLY"), SparkEntry.queries.keySet)
+
+  private[graft] def parseOnly(raw: Option[String], known: Set[String]): Set[String] = {
+    val names = raw.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .getOrElse(Set.empty[String])
+    val unknown = names.diff(known)
+    require(unknown.isEmpty, s"SPARK_GRAFT_ONLY names unknown queries: $unknown")
+    names
+  }
+
   def main(args: Array[String]): Unit = {
     val loadStart = procLine("/proc/loadavg")
     val uptimeStart = procLine("/proc/uptime")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // routing-key (rootKey) partitioning must satisfy joins keyed on
-      // (parentKey, rootKey) — subset co-partitioning, disabled by default
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // slim doc-metadata sides (orders-scale) fit comfortably in memory;
-      // broadcasting them keeps the fat nested-array side of renest joins
-      // unshuffled (at cluster scale: broadcast the dimension side)
-      .config("spark.sql.autoBroadcastJoinThreshold", String.valueOf(64L * 1024 * 1024))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val reps = Bench.reps
+    val only = Bench.only()
+    val spark = Session.bench()
     // Storage-pressure instrumentation (round 12): r11's medians were
     // silently polluted by storage-pool LRU eviction (shared artifacts
     // re-derived every rep), which only surfaced under adjudication
@@ -158,22 +165,7 @@ object Bench {
         }
       }
     })
-    // glob-path probe noise — see the matching note in Verify.scala
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
-      org.apache.logging.log4j.Level.ERROR)
-    // bounded-by-construction two-phase top-k finals run their last rank
-    // on one declared task (input ≤ k·partitions rows); WindowExec's
-    // blanket "No Partition Defined" WARN is spurious for them and
-    // drowns real signal in the drive logs. Fat single-task windows on
-    // DATA are guarded with teeth by SkewSpec/SoakSpec stage listeners.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    // untimed warmup: JIT + whole-stage-codegen compilation + parquet
-    // reader init, so the first timed query measures the query, not JVM
-    // startup (~3-4 s otherwise attributed to whichever query runs first)
-    spark.range(1000000).selectExpr("count(md5(cast(id as string)))").collect()
+    Session.warm(spark)
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
     // NOTE: caches deliberately persist across queries — the assembled
@@ -205,13 +197,9 @@ object Bench {
     // a 6-event temp changelog): its time is fixed streaming-trigger
     // overhead, not engine throughput, so it is verified (Verify/
     // CORRECTNESS) but not timed here.
-    // SPARK_GRAFT_ONLY (comma-separated names): local-iteration subset
-    // valve — unset in driver runs, so the recorded protocol is unchanged
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val ordered = SparkEntry.queries.toSeq
       .filterNot(_._1 == "st1_smoke")
-      .filter(kv => only.forall(_.contains(kv._1)))
+      .filter(kv => only.isEmpty || only(kv._1))
       .sortBy(_._1)
     // Artifact pass (untimed, reported): run every query once so the
     // ArtifactStore commits each shared derived relation / model to disk
@@ -237,9 +225,11 @@ object Bench {
     Caches.invalidate(spark)
     val artifactSecs = (System.nanoTime() - tArt) / 1e9
     // deliberate unpersists from Caches.invalidate also post removal
-    // events — rebase the counter after them so the timed phase starts
-    // near zero (listener delivery is async; the rebase is best-effort)
-    Thread.sleep(200); val evictedBase = evictedBlocks.get()
+    // events — rebase the counter once they are delivered, so the timed
+    // phase starts near zero (a bus still busy at the bounded wait's
+    // deadline leaves the rebase best-effort)
+    org.apache.spark.sql.graft.bridge.drainListeners(spark.sparkContext)
+    val evictedBase = evictedBlocks.get()
     val gcArtMs = gcMillis() - gcArtStart
     val gcTimedStart = gcMillis()
     val tTimed = System.nanoTime()

@@ -20,7 +20,6 @@ object Caches {
     graft.ext.Curation.invalidate(spark)
     graft.operators.Shred.invalidate(spark)
     graft.sources.StarDocs.invalidate(spark)
-    graft.sources.Io.invalidate(spark)
     graft.sources.Tables.invalidate(spark)
   }
 }

@@ -1,50 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // routing-key (rootKey) partitioning must satisfy joins keyed on
-      // (parentKey, rootKey) — subset co-partitioning, disabled by default
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // slim doc-metadata sides (orders-scale) fit comfortably in memory;
-      // broadcasting them keeps the fat nested-array side of renest joins
-      // unshuffled (at cluster scale: broadcast the dimension side)
-      .config("spark.sql.autoBroadcastJoinThreshold", String.valueOf(64L * 1024 * 1024))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // FileStreamSink's is-this-a-streaming-sink probe can't stat a glob
-    // path (x_lsm_compacted_read's b*/v*) and logs a full spurious
-    // FileNotFoundException trace at WARN before reading fine; keep the
-    // log clean so real failures stand out
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
-      org.apache.logging.log4j.Level.ERROR)
-    // bounded-by-construction two-phase top-k finals run their last rank
-    // on one declared task (input ≤ k·partitions rows); WindowExec's
-    // blanket "No Partition Defined" WARN is spurious for them and
-    // drowns real signal in the drive logs. Fat single-task windows on
-    // DATA are guarded with teeth by SkewSpec/SoakSpec stage listeners.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val only = Bench.only()
+    val spark = Session.bench()
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter: SPARK_GRAFT_ONLY=q1,q2 dumps just those
-    // queries (unset/empty → all; the driver never sets it). Typo'd names
-    // fail loudly — a silent zero-query dump reads as success downstream.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty).getOrElse(Set.empty[String])
-    val unknown = only.diff(SparkEntry.queries.keySet)
-    require(unknown.isEmpty, s"SPARK_GRAFT_ONLY names unknown queries: $unknown")
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>

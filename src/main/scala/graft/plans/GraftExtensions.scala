@@ -1,11 +1,14 @@
 package graft.plans
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** SQL surface for the custom kernels: registers `cosine_sim`,
-  * `sorted_jaccard`, `minhash_sig`, `hashed_shingles` as SQL functions, so
-  * `spark.sql(...)` users (and the thrift/Connect surface on a real
-  * cluster) reach the same codegen'd expressions as the Scala API.
+/** SQL surface for the custom kernels: registers every entry of
+  * [[GraftExtensions.functions]] (`cosine_sim`, `minhash_sig`, ...) as a
+  * SQL function, so `spark.sql(...)` users (and the thrift/Connect
+  * surface on a real cluster) reach the same codegen'd expressions as the
+  * Scala API.
   *
   * Two entry points:
   *  - `spark.sql.extensions=graft.plans.GraftExtensions` at session build
@@ -13,24 +16,11 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
   *  - [[GraftExtensions.register]] for an already-running session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import GraftExtensions.intArg
-  override def apply(e: SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-    def info(name: String) = new ExpressionInfo(classOf[GraftExtensions].getName, name)
-    e.injectFunction((FunctionIdentifier("cosine_sim"), info("cosine_sim"),
-      (args: Seq[Expression]) => CosineSimilarity(args(0), args(1))))
-    e.injectFunction((FunctionIdentifier("sorted_jaccard"), info("sorted_jaccard"),
-      (args: Seq[Expression]) => SortedArrayJaccard(args(0), args(1))))
-    e.injectFunction((FunctionIdentifier("minhash_sig"), info("minhash_sig"),
-      (args: Seq[Expression]) => MinHashSignature(args(0), intArg("minhash_sig", args(1)))))
-    e.injectFunction((FunctionIdentifier("hashed_shingles"), info("hashed_shingles"),
-      (args: Seq[Expression]) => HashedShingles(args(0), intArg("hashed_shingles", args(1)))))
-    e.injectFunction((FunctionIdentifier("json_merge_patch"), info("json_merge_patch"),
-      (args: Seq[Expression]) => JsonMergePatch(args(0), args(1))))
-    e.injectFunction((FunctionIdentifier("simhash_tokens"), info("simhash_tokens"),
-      (args: Seq[Expression]) => SimHashTokens(args(0), intArg("simhash_tokens", args(1)))))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, builder) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
+    }
 }
 
 object GraftExtensions {
@@ -38,8 +28,7 @@ object GraftExtensions {
     * literal type, fail with a named error otherwise (a bare
     * `.asInstanceOf[Int]` would throw an opaque ClassCastException on a
     * BIGINT literal and an eval error on a non-foldable column). */
-  private[plans] def intArg(fn: String,
-      e: org.apache.spark.sql.catalyst.expressions.Expression): Int = {
+  private[plans] def intArg(fn: String, e: Expression): Int = {
     if (!e.foldable)
       throw new IllegalArgumentException(s"$fn: second argument must be an integer literal")
     e.eval() match {
@@ -56,20 +45,21 @@ object GraftExtensions {
     }
   }
 
+  /** Every SQL function the engine exposes, name → expression builder:
+    * the one table both registration paths read. */
+  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "cosine_sim" -> (args => CosineSimilarity(args(0), args(1))),
+    "sorted_jaccard" -> (args => SortedArrayJaccard(args(0), args(1))),
+    "minhash_sig" -> (args => MinHashSignature(args(0), intArg("minhash_sig", args(1)))),
+    "hashed_shingles" -> (args => HashedShingles(args(0), intArg("hashed_shingles", args(1)))),
+    "json_merge_patch" -> (args => JsonMergePatch(args(0), args(1))),
+    "simhash_tokens" -> (args => SimHashTokens(args(0), intArg("simhash_tokens", args(1)))))
+
   /** Imperative registration on a live session. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cosine_sim",
-      args => CosineSimilarity(args(0), args(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_jaccard",
-      args => SortedArrayJaccard(args(0), args(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      args => MinHashSignature(args(0), intArg("minhash_sig", args(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("hashed_shingles",
-      args => HashedShingles(args(0), intArg("hashed_shingles", args(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("json_merge_patch",
-      args => JsonMergePatch(args(0), args(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash_tokens",
-      args => SimHashTokens(args(0), intArg("simhash_tokens", args(1))), "scala_udf")
+    functions.foreach { case (name, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
   }
 }

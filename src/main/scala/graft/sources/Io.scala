@@ -47,26 +47,6 @@ object Io {
   def readOrc(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).option("mode", "FAILFAST").orc(path)
 
-  // live parse registry, kept for any future persist-based reader: the
-  // DLQ split no longer registers here (it localCheckpoints — lineage
-  // truncated, blocks freed by the ContextCleaner when the handles die),
-  // so the sweep below is currently a no-op retained for the Caches
-  // contract. NOT a plan-keyed memo either way: a feed directory GROWS
-  // between calls (append-only ingest), and a memoized first parse would
-  // silently serve stale rows.
-  private val liveParses =
-    new java.util.concurrent.ConcurrentLinkedQueue[(SparkSession, DataFrame)]()
-
-  /** Release this session's tracked DLQ parses (the [[graft.Caches]]
-    * sweep). */
-  def invalidate(spark: SparkSession): Unit = {
-    val it = liveParses.iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e._1 eq spark) { e._2.unpersist(); it.remove() }
-    }
-  }
-
   /** JSONL ingest with a dead-letter queue: well-formed rows parse
     * against `schema`; malformed lines land in the DLQ relation VERBATIM
     * (`raw_line`) for replay after the producer is fixed — nothing is

@@ -100,4 +100,15 @@ class BenchLogicSpec extends AnyFunSuite {
     // a flaky query must never masquerade as a fast one
     assert(Bench.steadyFloor(Seq(5.0, -1.0, 2.1), Some(Seq(3.0, 1.5, 1.6))) == -1.0)
   }
+
+  test("SPARK_GRAFT_ONLY: unset or empty selects all; an unknown name fails loudly") {
+    val known = Set("j1_shred_counts", "x_pagerank")
+    assert(Bench.parseOnly(None, known).isEmpty)
+    assert(Bench.parseOnly(Some(" , "), known).isEmpty)
+    assert(Bench.parseOnly(Some("x_pagerank, j1_shred_counts"), known) == known)
+    // a typo used to select zero queries in Bench and publish `total: 0`
+    val e = intercept[IllegalArgumentException](
+      Bench.parseOnly(Some("x_pagerank,j1_shred_count"), known))
+    assert(e.getMessage.contains("j1_shred_count"), e.getMessage)
+  }
 }

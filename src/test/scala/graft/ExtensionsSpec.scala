@@ -55,4 +55,15 @@ class ExtensionsSpec extends SparkSpec {
       .head().getLong(0)
     assert(shSql == shApi)
   }
+
+  test("every function in the extension table resolves through SQL after register") {
+    GraftExtensions.register(spark)
+    val names = GraftExtensions.functions.map(_._1)
+    assert(names.distinct == names, s"duplicate names in the function table: $names")
+    names.foreach { n =>
+      val described = spark.sql(s"DESCRIBE FUNCTION $n").collect().map(_.getString(0))
+      assert(described.headOption.contains(s"Function: $n"),
+        s"$n does not resolve: ${described.toSeq}")
+    }
+  }
 }
